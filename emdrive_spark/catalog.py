@@ -6,17 +6,23 @@ Mirrors the reference's ``system.tables`` / ``system.columns`` bootstrap
 can't natively store: primary key, metric key + metric, defaults,
 emdrive nullability (SURVEY §1.1).
 
-Storage model: each table is a DataFrame registered as a temp view;
-appends replace the view (Spark DataFrames are immutable). On a real
-deployment the same class writes PK-sorted Parquet/Delta per table —
-the in-session dict is the unit-test surface, the layout contract
-(sorted by PK for min/max pruning) is what scales.
+Storage model: each table is a DataFrame registered as a temp view.
+Without a data directory an INSERT unions its VALUES batch into the
+view (lineage truncated every ``_CHECKPOINT_EVERY_INSERTS``). A saved
+table is an append-only log of immutable, PK-sorted Parquet segments
+under ``<root>/<schema>/<table>/``, listed with their PK ``[min, max]``
+in ``<root>/_catalog.json`` (the append-then-merge layout of the
+log-structured merge-tree, O'Neil et al. 1996): a save appends the
+rows inserted since the last one as one segment, and the view reads
+exactly the listed segments. The PK ranges let an INSERT check
+uniqueness against the overlapping segments only.
 """
 
 from __future__ import annotations
 
 import datetime as _dt
-from dataclasses import dataclass
+import os
+from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
@@ -31,8 +37,26 @@ DEFAULT_SCHEMA = "main"
 
 # INSERTs between lineage truncations (Catalog.insert) — high enough to
 # keep checkpoint cost off the common path, low enough that plan depth
-# stays bounded for ingest loops.
+# stays bounded for ingest loops. Also the most segments a saved table
+# keeps (Catalog.save compacts past it), which keeps Spark's listing of
+# a table's files on the driver (parallelPartitionDiscovery.threshold
+# is 32 paths).
 _CHECKPOINT_EVERY_INSERTS = 32
+
+
+@dataclass(frozen=True)
+class Segment:
+    """One immutable Parquet file of a saved table, sorted by PK.
+    ``lo``/``hi`` bound its PK values; None means unknown (a legacy
+    file, or a PK type without a tracked order), so an INSERT always
+    checks it."""
+
+    file: str  # name inside the table directory
+    lo: object = None
+    hi: object = None
+
+    def overlaps(self, lo: object, hi: object) -> bool:
+        return self.lo is None or (self.lo <= hi and lo <= self.hi)
 
 
 @dataclass
@@ -42,21 +66,18 @@ class TableEntry:
     columns: tuple[ast.ColumnDef, ...]
     df: DataFrame
     inserts: int = 0  # since last lineage truncation (see Catalog.insert)
-    # Mutated since the last save() to the current save root. New and
-    # inserted-into tables are dirty; restore() marks entries clean
-    # (their on-disk snapshot IS the restore root). save() skips clean
-    # tables, so per-statement durability cost is O(changed table), not
-    # O(whole catalog) — the difference between a server whose INSERT
-    # latency is constant and one that rewrites every table per write.
-    dirty: bool = True
-    # Root of THIS entry's last successful write/restore. The skip in
-    # save() requires saved_root == root, not just a clean dirty flag:
-    # a save to a DIFFERENT root that clears dirty flags and then
-    # throws midway must not let a later save to the original root
-    # trust those flags and skip rewriting — that would publish a
-    # _catalog.json pointing at a stale snapshot (silent loss of
-    # acknowledged inserts; round-5 review finding).
+    # Root of THIS entry's last successful write/restore, and the
+    # segments there that ``df`` reads (None: ``df`` is not a segment
+    # read, so the next save writes the whole table). The pair is per
+    # entry, not per catalog: a save to a different root that fails
+    # midway leaves each entry pointing at the root it really reached,
+    # so a later save to the original root rewrites it instead of
+    # trusting a stale segment list.
     saved_root: str | None = None
+    segments: list[Segment] | None = None
+    # Rows inserted since the last save, kept while ``segments`` is set:
+    # the next save to ``saved_root`` appends them as one segment.
+    pending: list[dict] = field(default_factory=list)
     # True only while the table PROVABLY has no rows (fresh CREATE,
     # nothing inserted). Lets the first INSERT skip the PK-uniqueness
     # semi-join — a whole Spark job spent proving a 0-row table has no
@@ -93,6 +114,10 @@ def _entry_meta(e: TableEntry) -> dict:
                 "default": _default_to_json(c.default),
             }
             for c in e.columns
+        ],
+        "segments": [
+            {"file": g.file, "min": _bound_to_json(g.lo), "max": _bound_to_json(g.hi)}
+            for g in e.segments
         ],
     }
 
@@ -207,9 +232,17 @@ class Catalog:
                 raise EmdriveValidationError(
                     f"Duplicate PRIMARY KEY value in INSERT batch for table {stmt.table}."
                 )
-            if not entry.known_empty:
+            against = None if entry.known_empty else entry.df
+            if entry.segments is not None and not entry.pending:
+                # df reads exactly the saved segments: only those whose
+                # PK range overlaps the batch's can hold a clashing key
+                lo, hi = min(pk_vals), max(pk_vals)
+                hit = [g for g in entry.segments if g.overlaps(lo, hi)]
+                table_dir = os.path.join(entry.saved_root, entry.schema_name, entry.name)
+                against = self._segments_frame(entry.columns, table_dir, hit) if hit else None
+            if against is not None:
                 clashes = (
-                    batch.join(entry.df.select(pk), on=pk, how="left_semi")
+                    batch.join(against.select(pk), on=pk, how="left_semi")
                     .limit(1)
                     .count()
                 )
@@ -220,16 +253,22 @@ class Catalog:
 
             entry.df = entry.df.unionByName(batch)
             entry.known_empty = False
+            if entry.segments is not None:
+                entry.pending.extend(py_rows)  # the next save appends them
             # Lineage hygiene: every INSERT stacks a Union node, so a
             # long-lived table would accrete an unbounded plan (analyzer
             # time grows per statement, eventually StackOverflow).
             # Truncate the chain periodically — the checkpoint
             # materializes only this table's rows, and the PK anti-join
-            # above already reads the data each INSERT anyway.
+            # above already reads the data each INSERT anyway. A save
+            # resets the count, so only unsaved tables get here; one
+            # with a segment list drops it with its pending rows, which
+            # bounds the driver memory they hold: its next save writes
+            # the whole table.
             entry.inserts += 1
-            entry.dirty = True  # next save() must rewrite this table
             if entry.inserts % _CHECKPOINT_EVERY_INSERTS == 0:
                 entry.df = ckpt(entry.df)
+                entry.segments, entry.pending = None, []
             entry.df.createOrReplaceTempView(entry.name)
         # no refresh_system_views() here: the system relations expose
         # DDL metadata only — INSERT never changes them, and the hot
@@ -303,84 +342,167 @@ class Catalog:
     # filesystem.rs:11-15; blank-file bootstrap write.rs:12-38) --------
 
     def save(self, root: str) -> None:
-        """Persist every table as PK-sorted Parquet at
-        ``<root>/<schema>/<table>/`` plus a ``_catalog.json`` with the
-        DDL metadata Spark can't store (PK, metric, defaults, emdrive
-        nullability). PK-sorting is the layout contract: Parquet
-        min/max row-group stats make PK equality lookups prune like the
-        reference's B+tree.
+        """Persist every table at ``<root>/<schema>/<table>/`` as
+        PK-sorted Parquet segments, plus a ``_catalog.json`` holding
+        the DDL metadata Spark can't store (PK, metric, defaults,
+        emdrive nullability) and each table's segment list with PK
+        ranges. A table whose segments are already at ``root`` appends
+        the rows inserted since its last save as one new segment,
+        written through Arrow on the driver with no Spark job; clean
+        tables write nothing. Any other table (never saved, saved to a
+        different root, or whose segment list an unsaved ingest loop
+        dropped) is written whole through Spark. Past
+        ``_CHECKPOINT_EVERY_INSERTS`` segments, the newest small ones
+        are merged into one (``_compact``).
+
+        Segment files are immutable and written before the json that
+        lists them, which is published by temp-file + os.replace
+        (atomic): a crash leaves the previous catalog intact and the
+        unlisted file ignored. Files a compaction supersedes are
+        deleted only at the following compaction, so a query planned
+        before it still finds its files. Each live entry is re-pointed
+        at exactly its listed segments, which also truncates the union
+        lineage its INSERTs accreted.
 
         Runs UNDER the catalog write lock (r4 review: an unlocked save
         racing a concurrent INSERT read a pre-union entry.df and
         persisted a snapshot missing acknowledged rows; two concurrent
-        saves also corrupted each other's overwrite jobs and the json).
-        Crash tolerance: each table writes to a __tmp dir swapped in
-        only after the write commits — the old mode('overwrite') deleted
-        committed data BEFORE rewriting, so a crash mid-save lost every
-        previously persisted row; restore() falls back to the __old dir
-        if a crash lands in the tiny rename window — and the metadata
-        json is published via temp-file + os.replace (atomic).
-
-        Incremental: a table that is clean AND whose last successful
-        write landed at THIS root (``entry.saved_root == root``) is
-        skipped — its on-disk snapshot is already current — so a
-        server persisting after every statement pays O(changed table)
-        per INSERT, not O(catalog). The skip keys on the per-entry
-        root, not a catalog-level "last root": a save to a different
-        root that clears dirty flags and then fails midway leaves
-        those entries pointing at the half-written root, so the next
-        save to the original root rewrites them instead of trusting a
-        stale snapshot."""
+        saves also corrupted each other's writes and the json)."""
+        import contextlib
         import json
-        import os
-        import shutil
 
         with self._write_lock:
-            meta = {}
+            meta, doomed = {}, []
             for e in self.tables.values():
-                path = os.path.join(root, e.schema_name, e.name)
-                if not e.dirty and e.saved_root == root and os.path.exists(path):
+                table_dir = os.path.join(root, e.schema_name, e.name)
+                if e.saved_root != root or e.segments is None:
+                    e.segments = (
+                        [] if e.known_empty
+                        else self._spark_segments(e, e.df, table_dir)
+                    )
+                elif e.pending:
+                    e.segments.append(self._arrow_segment(e, e.pending, table_dir))
+                    if len(e.segments) > _CHECKPOINT_EVERY_INSERTS:
+                        doomed += self._compact(e, table_dir)
+                else:
                     meta[e.name] = _entry_meta(e)
                     continue
-                tmp, old = path + "__tmp", path + "__old"
-                shutil.rmtree(tmp, ignore_errors=True)
-                e.df.sortWithinPartitions(e.pk.name).write.mode("overwrite").parquet(tmp)
-                shutil.rmtree(old, ignore_errors=True)
-                if os.path.exists(path):
-                    os.rename(path, old)
-                os.rename(tmp, path)
-                shutil.rmtree(old, ignore_errors=True)
-                # Re-point the live entry at the snapshot just written
-                # (r4 advisor, medium): a restored table's entry.df has
-                # lineage over the OLD part-files at this path
-                # (InMemoryFileIndex caches leaf files at restore time),
-                # so the swap above just deleted the files it would
-                # scan — the next action (SELECT, or the PK semi-join
-                # of the next INSERT) threw FileNotFoundException.
-                # Re-reading also truncates the union lineage a string
-                # of INSERTs accretes, so save() doubles as the same
-                # checkpoint Catalog.insert applies periodically.
-                e.df = self.spark.read.schema(spark_schema(e.columns)).parquet(path)
+                e.saved_root, e.pending, e.inserts = root, [], 0
+                e.df = self._segments_frame(e.columns, table_dir, e.segments)
                 e.df.createOrReplaceTempView(e.name)
-                e.inserts = 0
-                e.dirty = False
-                e.saved_root = root
                 meta[e.name] = _entry_meta(e)
             os.makedirs(root, exist_ok=True)
             tmp_json = os.path.join(root, "_catalog.json.tmp")
             with open(tmp_json, "w") as f:
                 json.dump(meta, f, indent=2)
             os.replace(tmp_json, os.path.join(root, "_catalog.json"))
+            for path in doomed:
+                with contextlib.suppress(FileNotFoundError):
+                    os.remove(path)
+
+    def _segments_frame(
+        self, columns: tuple[ast.ColumnDef, ...], table_dir: str, segments: list[Segment]
+    ) -> DataFrame:
+        """A read of exactly ``segments`` in ``table_dir``."""
+        schema = spark_schema(columns)
+        if not segments:
+            return self._empty_frame(schema)
+        return self.spark.read.schema(schema).parquet(
+            *(os.path.join(table_dir, g.file) for g in segments)
+        )
+
+    def _arrow_segment(self, entry: TableEntry, rows: list[dict], table_dir: str) -> Segment:
+        """Write driver-side ``rows`` as one PK-sorted segment through
+        Arrow. Naive timestamps are wall-clock times in the session
+        time zone, as ``createDataFrame`` reads them, so the file holds
+        the same instants Spark's own write of the batch would."""
+        import pyarrow as pa
+        import pyarrow.compute as pc
+        import pyarrow.parquet as pq
+        from pyspark.sql.pandas.types import to_arrow_schema
+
+        arrow_schema = to_arrow_schema(spark_schema(entry.columns))
+        tz = self.spark.conf.get("spark.sql.session.timeZone")
+        cols = []
+        for f in arrow_schema:
+            values = [r[f.name] for r in rows]
+            if pa.types.is_timestamp(f.type):
+                naive = pa.array(values, pa.timestamp(f.type.unit))
+                cols.append(pc.assume_timezone(naive, tz).cast(f.type))
+            else:
+                cols.append(pa.array(values, f.type))
+        pk = entry.pk.name
+        table = pa.Table.from_arrays(cols, schema=arrow_schema).sort_by(pk)
+        name = f"part-{ulid()}.parquet"
+        os.makedirs(table_dir, exist_ok=True)
+        pq.write_table(table, os.path.join(table_dir, name))
+        keys = table.column(pk)
+        return Segment(name, *_range(keys[0].as_py(), keys[-1].as_py()))
+
+    def _spark_segments(self, entry: TableEntry, df: DataFrame, table_dir: str) -> list[Segment]:
+        """Write ``df`` through Spark as one PK-sorted segment; its PK
+        range comes from the Parquet footer statistics."""
+        import shutil
+
+        import pyarrow.parquet as pq
+
+        staging = os.path.join(table_dir, f"_staging-{ulid()}")
+        df.coalesce(1).sortWithinPartitions(entry.pk.name).write.parquet(staging)
+        segments = []
+        for out in sorted(os.listdir(staging)):
+            if out.startswith("part-") and out.endswith(".parquet"):
+                name = f"part-{ulid()}.parquet"
+                path = os.path.join(table_dir, name)
+                os.replace(os.path.join(staging, out), path)
+                meta = pq.ParquetFile(path).metadata
+                col = next(
+                    j for j in range(meta.num_columns)
+                    if meta.schema.column(j).path == entry.pk.name
+                )
+                stats = [meta.row_group(i).column(col).statistics for i in range(meta.num_row_groups)]
+                if stats and all(st is not None and st.has_min_max for st in stats):
+                    bounds = _range(min(st.min for st in stats), max(st.max for st in stats))
+                else:  # no rows, or stats the writer left out
+                    bounds = (None, None)
+                segments.append(Segment(name, *bounds))
+        shutil.rmtree(staging)
+        return segments
+
+    def _compact(self, entry: TableEntry, table_dir: str) -> list[str]:
+        """Merge the newest run of small segments into one, keeping
+        every older segment larger than all segments after it (so each
+        byte is rewritten O(log n) times, as in a size-tiered LSM
+        merge). Returns the files to delete once the new catalog is
+        published: those neither listed before this save nor after it,
+        which are the ones the previous compaction superseded plus any
+        a crash left unlisted."""
+        sizes = [os.path.getsize(os.path.join(table_dir, g.file)) for g in entry.segments]
+        start, later = len(sizes) - 2, sum(sizes)
+        for i, size in enumerate(sizes[:-2]):
+            later -= size
+            if size <= later:
+                start = i
+                break
+        merged = self._spark_segments(
+            entry, self._segments_frame(entry.columns, table_dir, entry.segments[start:]), table_dir
+        )
+        keep = {g.file for g in entry.segments + merged}
+        entry.segments = entry.segments[:start] + merged
+        return [
+            os.path.join(table_dir, f) for f in os.listdir(table_dir)
+            if f.startswith("part-") and f.endswith(".parquet") and f not in keep
+        ]
 
     def restore(self, root: str) -> int:
         """Load a saved catalog: re-register every table (schema from
         the metadata file — nullability/PK/metric survive the
-        round-trip, which plain Parquet alone would lose). Runs under
-        the write lock (it mutates self.tables); if a crash interrupted
-        save() between its two directory renames, the table's data
-        survives under ``<table>__old`` and is swapped back here."""
+        round-trip, which plain Parquet alone would lose) over exactly
+        its listed segments; a file in the table directory that the
+        json does not list is ignored. A json written before segment
+        lists existed restores each Parquet file of the table directory
+        as a segment of unknown range. Runs under the write lock (it
+        mutates self.tables)."""
         import json
-        import os
 
         from emdrive_spark.types import parse_type
 
@@ -399,22 +521,28 @@ class Catalog:
                     )
                     for c in t["columns"]
                 )
-                path = os.path.join(root, t["schema_name"], name)
-                if not os.path.exists(path) and os.path.exists(path + "__old"):
-                    os.rename(path + "__old", path)
-                df = self.spark.read.schema(spark_schema(columns)).parquet(path)
-                entry = TableEntry(
+                table_dir = os.path.join(root, t["schema_name"], name)
+                if "segments" in t:
+                    segments = [
+                        Segment(g["file"], _bound_from_json(g["min"]), _bound_from_json(g["max"]))
+                        for g in t["segments"]
+                    ]
+                else:
+                    segments = [
+                        Segment(f) for f in sorted(os.listdir(table_dir))
+                        if f.startswith("part-") and f.endswith(".parquet")
+                    ]
+                df = self._segments_frame(columns, table_dir, segments)
+                self.tables[name] = TableEntry(
                     name=name,
                     schema_name=t["schema_name"],
                     columns=columns,
                     df=df,
-                    # the snapshot just read IS this root's current
-                    # state — the next save() to the same root may
-                    # skip it until a mutation re-dirties it
-                    dirty=False,
+                    # the segments just listed ARE this root's current
+                    # state — the next save() to the same root appends
                     saved_root=root,
+                    segments=segments,
                 )
-                self.tables[name] = entry
                 df.createOrReplaceTempView(name)
             self.refresh_system_views()
         return len(meta)
@@ -425,9 +553,9 @@ class Catalog:
         catalog — the reference bootstraps these as REAL tables an SQL
         client reads (/root/reference/src/storage/system.rs:5-91,
         /root/reference/src/executor/mod.rs:64-71). Refreshed on every
-        CREATE/INSERT/restore so the views always reflect the live
-        catalog. (Temp-view names can't be dotted, so ``system.tables``
-        surfaces as ``system_tables``.)"""
+        CREATE and restore, the only statements that change DDL
+        metadata (INSERT skips it). (Temp-view names can't be dotted,
+        so ``system.tables`` surfaces as ``system_tables``.)"""
         self.system_tables().createOrReplaceTempView("system_tables")
         self.system_columns().createOrReplaceTempView("system_columns")
 
@@ -545,6 +673,31 @@ def _coerce(cdef: ast.ColumnDef, value: object) -> object:
         # a README/code discrepancy, we follow the README. SURVEY §1.2)
         return _dt.datetime.fromisoformat(value)
     return value
+
+
+def _range(lo: object, hi: object) -> tuple[object, object]:
+    """A segment's PK range, kept only for key types whose Python order
+    is the Parquet statistics order: unsigned integers (int or integral
+    Decimal), strings (code point = UTF-8 byte order) and binary
+    (unsigned bytes). Anything else is unknown: (None, None)."""
+    import decimal
+
+    out = []
+    for v in (lo, hi):
+        if isinstance(v, decimal.Decimal):
+            v = int(v)
+        if not isinstance(v, (int, str, bytes)):
+            return None, None
+        out.append(v)
+    return out[0], out[1]
+
+
+def _bound_to_json(v: object) -> object:
+    return {"hex": v.hex()} if isinstance(v, bytes) else v
+
+
+def _bound_from_json(v: object) -> object:
+    return bytes.fromhex(v["hex"]) if isinstance(v, dict) else v
 
 
 def _default_to_json(expr: ast.Expr | None) -> dict | None:

@@ -35,7 +35,7 @@ from emdrive_spark.sql.tokenizer import mask_spans, split_around_spans, split_st
 QUERY_HEADS = ("SELECT", "WITH", "VALUES", "TABLE", "EXPLAIN", "SHOW", "DESCRIBE", "DESC")
 
 
-def _head(sql: str) -> str:
+def statement_head(sql: str) -> str:
     s = sql.strip()
     return s.split(None, 1)[0].upper() if s else ""
 
@@ -67,7 +67,7 @@ def is_query(sql: str) -> bool:
     the tokenizer's scan_spans — the same definition of string/comment
     opacity split_statements splits by."""
     masked = mask_spans(sql)
-    head = _head(masked)
+    head = statement_head(masked)
     if head not in QUERY_HEADS:
         return False
     return not (head in ("WITH", "EXPLAIN") and _MUTATION_KEYWORD_RE.search(masked))
@@ -196,9 +196,10 @@ class Engine:
 
     def _persist(self) -> None:
         """Durability hook: with a configured data directory, every
-        successful mutation rewrites the saved catalog (small per-table
-        PK-sorted parquet + metadata json — the moral equivalent of the
-        reference flushing pages on write)."""
+        successful mutation is saved there before it is acknowledged.
+        An INSERT's rows append one PK-sorted Parquet segment and the
+        metadata json is republished — the moral equivalent of the
+        reference adding the rows to its pages on write."""
         if self.data_directory:
             self.catalog.save(self.data_directory)
 
@@ -234,7 +235,7 @@ class Engine:
                         "This endpoint is read-only: every statement must "
                         f"be a query ({'/'.join(QUERY_HEADS)}, with no "
                         "CTE-prefixed DML); got "
-                        f"{_head(part) or 'empty statement'!r}."
+                        f"{statement_head(part) or 'empty statement'!r}."
                     )
         result = None
         for part in parts:

@@ -20,15 +20,17 @@ import time
 import urllib.parse
 from http.server import BaseHTTPRequestHandler, ThreadingHTTPServer
 
-# Request log stream — the reference debug-logs a ULID per request at
-# receipt and completion with µs elapsed (server/mod.rs:97-99,132-136).
-# Same id also rides the X-Request-Id response header.
+# Request log stream: one INFO line per request once it is answered,
+# with the request's ULID, statement kind, HTTP status, result rows and
+# µs elapsed, as key=value pairs (the reference logs the id and the µs,
+# server/mod.rs:97-99,132-136). The id also rides the X-Request-Id
+# response header.
 log = logging.getLogger("emdrive_spark.server")
 
 from pyspark.sql import SparkSession
 
 from emdrive_spark.config import Config
-from emdrive_spark.engine import Engine
+from emdrive_spark.engine import Engine, statement_head
 from emdrive_spark.functions.generators import ulid
 from emdrive_spark.sql.errors import EmdriveError
 
@@ -47,9 +49,10 @@ class ResultTooLarge(Exception):
         )
 
 
-def _rows_json(df, max_rows: int) -> str:
+def _rows_json(df, max_rows: int) -> tuple[str, int]:
+    """(JSON body, result row count) of a statement's result."""
     if df is None:
-        return json.dumps({"column_names": [], "rows": []})
+        return json.dumps({"column_names": [], "rows": []}), 0
     # The cap rides INSIDE the plan (limit -> CollectLimit), not as a
     # post-collect truncation: a no-LIMIT SELECT over a big table must
     # never materialize on the driver (r9 verdict item 4 — the
@@ -66,7 +69,7 @@ def _rows_json(df, max_rows: int) -> str:
     return json.dumps(
         {"column_names": df.columns, "rows": [r.asDict(recursive=True) for r in rows]},
         default=str,
-    )
+    ), len(rows)
 
 
 def make_handler(engine: Engine, max_result_rows: int | None = None):
@@ -91,14 +94,14 @@ def make_handler(engine: Engine, max_result_rows: int | None = None):
         def _run(self, sql: str, read_only: bool) -> None:
             t0 = time.perf_counter_ns()
             request_id = ulid()
-            log.debug("received request ID %s", request_id)
+            n_rows = 0
             try:
                 # read-only is enforced PER STATEMENT inside the engine
                 # (quote-aware split), so 'SELECT 1; INSERT ...' cannot
                 # smuggle a mutation through GET; WITH/VALUES/TABLE query
                 # forms are allowed, matching the ANSI passthrough.
                 df = engine.execute_script(sql, read_only=read_only)
-                body = _rows_json(df, cap)
+                body, n_rows = _rows_json(df, cap)
                 code = 200
             except EmdriveError as exc:
                 body = json.dumps(exc.to_json())
@@ -130,7 +133,10 @@ def make_handler(engine: Engine, max_result_rows: int | None = None):
                     body = json.dumps({"type": "server", "message": first})
                     code = 500
             elapsed_us = (time.perf_counter_ns() - t0) // 1000
-            log.debug("finished request ID %s in %d µs", request_id, elapsed_us)
+            log.info(
+                "request id=%s kind=%s status=%d rows=%d us=%d",
+                request_id, statement_head(sql) or "EMPTY", code, n_rows, elapsed_us,
+            )
             self._respond(code, body, elapsed_us, request_id)
 
         def _respond(
@@ -292,6 +298,9 @@ def install_shutdown_handlers(server: ThreadingHTTPServer) -> None:
 
 
 if __name__ == "__main__":
+    # the request log on stderr; other libraries' INFO (py4j) stays quiet
+    logging.basicConfig(format="%(asctime)s %(levelname)s %(name)s %(message)s")
+    logging.getLogger("emdrive_spark").setLevel(logging.INFO)
     server = serve()
     install_shutdown_handlers(server)
     _host, _port = server.server_address[:2]

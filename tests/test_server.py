@@ -102,16 +102,22 @@ def test_get_rejects_multi_statement_mutation(endpoint):
 
 
 def test_request_log_stream(endpoint, caplog):
-    # reference logs a ULID at receipt and at completion with µs elapsed
-    # (server/mod.rs:97-99,132-136); the same id rides X-Request-Id
+    # one structured INFO line per answered request: the ULID that rides
+    # X-Request-Id, statement kind, status, result rows and µs elapsed
+    # (the reference logs id and µs, server/mod.rs:97-99,132-136)
     import logging
+    import re
 
-    with caplog.at_level(logging.DEBUG, logger="emdrive_spark.server"):
-        _, _, headers = _post(endpoint, "SELECT name FROM ht WHERE id = 1")
-    rid = headers["X-Request-Id"]
-    msgs = [r.getMessage() for r in caplog.records if r.name == "emdrive_spark.server"]
-    assert any(m == f"received request ID {rid}" for m in msgs)
-    assert any(m.startswith(f"finished request ID {rid} in ") and m.endswith(" µs") for m in msgs)
+    with caplog.at_level(logging.INFO, logger="emdrive_spark.server"):
+        _, _, ok = _post(endpoint, "SELECT name FROM ht WHERE id = 1")
+        _, _, bad = _post(endpoint, "SELECT x FROM no_such_table")
+    lines = [r.getMessage() for r in caplog.records if r.name == "emdrive_spark.server"]
+    for headers, status, rows in ((ok, 200, 1), (bad, 400, 0)):
+        rid = headers["X-Request-Id"]
+        (line,) = [m for m in lines if f"id={rid} " in m]
+        assert re.fullmatch(
+            rf"request id={rid} kind=SELECT status={status} rows={rows} us=\d+", line
+        ), line
 
 
 def test_result_cap_413_and_at_cap_ok(spark, monkeypatch):
