@@ -579,7 +579,7 @@ def dedup_components(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     member = band_members(corpus).transform(ckpt)
-    # r12 measured and REJECTED (tools/ab_pin.py): pinning member by
+    # Measured and REJECTED: pinning member by
     # doc_id + bkt (layout.pin) with shuffle_hash-hinted label sides
     # ran 3.9 -> 4.3 s / cpu 31 -> 40 s — the per-round label frames
     # here are small enough that AQE's broadcast already makes the

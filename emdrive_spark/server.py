@@ -10,12 +10,16 @@
 Errors return HTTP 400 with ``{"type": "syntax"|"validation",
 "message": ...}`` (errors.rs:4-18). stdlib http.server — the front end
 is deliberately thin; Spark's scheduler provides the concurrency the
-reference got from its bounded mpsc channel (executor/mod.rs:19)."""
+reference got from its bounded mpsc channel (executor/mod.rs:19). At
+most ``MAX_IN_FLIGHT_REQUESTS`` statements execute at once, as in the
+reference; the excess is answered 503 ``{"type": "server"}`` at once
+instead of queueing a thread each."""
 
 from __future__ import annotations
 
 import json
 import logging
+import threading
 import time
 import urllib.parse
 from http.server import BaseHTTPRequestHandler, ThreadingHTTPServer
@@ -36,6 +40,7 @@ from emdrive_spark.sql.errors import EmdriveError
 
 DEFAULT_HOST = "127.0.0.1"
 DEFAULT_PORT = 8824  # the reference's default (config.rs:14-22)
+MAX_IN_FLIGHT_REQUESTS = 100  # the reference's cap on executing statements
 
 
 class ResultTooLarge(Exception):
@@ -90,10 +95,34 @@ def make_handler(engine: Engine, max_result_rows: int | None = None):
         # rejected up front (413) instead of buffering an arbitrary
         # body into memory.
         max_body_bytes = 16 * 1024 * 1024
+        # Slots for executing statements, shared by this handler's
+        # request threads.
+        in_flight = threading.BoundedSemaphore(MAX_IN_FLIGHT_REQUESTS)
 
         def _run(self, sql: str, read_only: bool) -> None:
             t0 = time.perf_counter_ns()
             request_id = ulid()
+            if self.in_flight.acquire(blocking=False):
+                try:
+                    code, body, n_rows = self._execute(sql, read_only)
+                finally:
+                    self.in_flight.release()
+            else:
+                code, n_rows = 503, 0
+                body = json.dumps({
+                    "type": "server",
+                    "message": f"Server busy: {MAX_IN_FLIGHT_REQUESTS} statements "
+                    "are already executing; retry later.",
+                })
+            elapsed_us = (time.perf_counter_ns() - t0) // 1000
+            log.info(
+                "request id=%s kind=%s status=%d rows=%d us=%d",
+                request_id, statement_head(sql) or "EMPTY", code, n_rows, elapsed_us,
+            )
+            self._respond(code, body, elapsed_us, request_id)
+
+        def _execute(self, sql: str, read_only: bool) -> tuple[int, str, int]:
+            """(HTTP status, JSON body, result rows) of one script."""
             n_rows = 0
             try:
                 # read-only is enforced PER STATEMENT inside the engine
@@ -132,12 +161,7 @@ def make_handler(engine: Engine, max_result_rows: int | None = None):
                 else:
                     body = json.dumps({"type": "server", "message": first})
                     code = 500
-            elapsed_us = (time.perf_counter_ns() - t0) // 1000
-            log.info(
-                "request id=%s kind=%s status=%d rows=%d us=%d",
-                request_id, statement_head(sql) or "EMPTY", code, n_rows, elapsed_us,
-            )
-            self._respond(code, body, elapsed_us, request_id)
+            return code, body, n_rows
 
         def _respond(
             self, code: int, body: str, elapsed_us: int, request_id: str

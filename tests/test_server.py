@@ -149,3 +149,43 @@ def test_result_cap_413_and_at_cap_ok(spark, monkeypatch):
         assert len(body["rows"]) == 5
     finally:
         httpd.shutdown()
+
+
+def test_in_flight_cap_503_then_recovers(spark, caplog):
+    """Past MAX_IN_FLIGHT_REQUESTS executing statements a request gets a
+    typed 503 at once (the reference caps in-flight statements at 100);
+    once a slot frees, the next request runs. The slots are taken on the
+    handler's semaphore directly, so no request threads are started."""
+    import logging
+
+    from emdrive_spark.server import MAX_IN_FLIGHT_REQUESTS
+
+    httpd = serve(spark, host="127.0.0.1", port=18826)
+    t = threading.Thread(target=httpd.serve_forever, daemon=True)
+    t.start()
+    url = "http://127.0.0.1:18826"
+    slots = httpd.RequestHandlerClass.in_flight
+    taken = 0
+    try:
+        while slots.acquire(blocking=False):
+            taken += 1
+        assert taken == MAX_IN_FLIGHT_REQUESTS == 100
+        with caplog.at_level(logging.INFO, logger="emdrive_spark.server"):
+            status, body, headers = _post(url, "SELECT 1 AS one")
+        assert status == 503
+        assert body["type"] == "server"
+        assert "100" in body["message"]
+        rid = headers["X-Request-Id"]
+        assert any(
+            f"id={rid} kind=SELECT status=503 rows=0 " in r.getMessage()
+            for r in caplog.records
+        )
+        slots.release()
+        taken -= 1
+        status, body, _ = _post(url, "SELECT 1 AS one")
+        assert status == 200
+        assert body["rows"] == [{"one": 1}]
+    finally:
+        for _ in range(taken):
+            slots.release()
+        httpd.shutdown()
