@@ -12,8 +12,10 @@ Errors return HTTP 400 with ``{"type": "syntax"|"validation",
 is deliberately thin; Spark's scheduler provides the concurrency the
 reference got from its bounded mpsc channel (executor/mod.rs:19). At
 most ``MAX_IN_FLIGHT_REQUESTS`` statements execute at once, as in the
-reference; the excess is answered 503 ``{"type": "server"}`` at once
-instead of queueing a thread each."""
+reference; a statement over the cap is answered 503 ``{"type":
+"server"}`` without executing. Only execution is capped: each
+connection still gets its own thread, which reads the body before the
+slot check and writes the response after the slot is released."""
 
 from __future__ import annotations
 

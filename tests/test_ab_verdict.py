@@ -1,6 +1,6 @@
-"""The verdict rule of tools/ab.py: a side is better only when it wins
-at least 9 of every 10 pairs AND the medians differ by more than the
-parent's interquartile range. No Spark."""
+"""The verdict rule of tools/ab.py: a side is better only when there are
+at least 10 pairs, it wins at least 9 of every 10 of them AND the
+medians differ by more than the parent's interquartile range. No Spark."""
 
 from __future__ import annotations
 
@@ -50,3 +50,10 @@ def test_regression_and_higher_is_better():
     assert ab.verdict(PARENT, [p + 50 for p in PARENT], "lower")["verdict"] == "worse"
     v = ab.verdict(PARENT, [p + 50 for p in PARENT], "higher")
     assert (v["wins"], v["verdict"]) == (10, "better")
+
+
+def test_fewer_than_ten_pairs_are_unresolved():
+    # 5/5 wins by far more than the IQR still cannot claim 9 in every 10
+    v = ab.verdict(PARENT[:5], [p - 50 for p in PARENT[:5]], "lower")
+    assert (v["wins"], v["pairs"], v["verdict"]) == (5, 5, "unresolved")
+    assert ab.verdict(PARENT[:5], [p + 50 for p in PARENT[:5]], "lower")["verdict"] == "unresolved"

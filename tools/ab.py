@@ -1,18 +1,20 @@
 """Compare two git revisions on one benchmark workload.
 
-    python tools/ab.py PARENT CHANGE --workload W [--pairs 10] [--seed 1] [--seconds 15]
+    python tools/ab.py PARENT CHANGE --workload W [--pairs 10] [--seed 1]
 
 Checks PARENT and CHANGE out into git worktrees under a temp dir and
 runs ``perfbench/run.py --workload W --seed S --seconds T --trace 0`` in
-each, PAIRS times. Pair i runs both revisions at seed S + i; the parent
-runs first in even pairs and second in odd ones. For every end-to-end
+each, PAIRS times, where T is BENCHMARK.json's ``run_seconds``. Pair i
+runs both revisions at seed S + i; the parent runs first in even pairs
+and second in odd ones. For every end-to-end
 metric in BENCHMARK.json it prints each side's median and quartiles, the
 change's wins out of the pairs (ties count for neither side), the
 verdict and whether the change's median is within the metric's bound.
 
-Verdict (the rule for claiming a gain): "better" or "worse" when one
-side wins at least 9 of every 10 pairs and the medians differ by more
-than the parent's interquartile range; otherwise "unresolved".
+Verdict (the rule for claiming a gain): "better" or "worse" when there
+are at least 10 pairs, one side wins at least 9 of every 10 of them and
+the medians differ by more than the parent's interquartile range;
+otherwise "unresolved".
 """
 
 from __future__ import annotations
@@ -26,6 +28,7 @@ import sys
 import tempfile
 
 ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+MIN_PAIRS = 10  # fewer pairs cannot show 9 wins in every 10
 
 
 def quartiles(xs: list[float]) -> tuple[float, float, float]:
@@ -44,7 +47,9 @@ def verdict(parent: list[float], change: list[float], better: str) -> dict:
     pq, cq = quartiles(parent), quartiles(change)
     gap = sign * (pq[1] - cq[1])  # > 0 when the change's median is better
     n = len(parent)
-    if wins * 10 >= 9 * n and gap > pq[2] - pq[0]:
+    if n < MIN_PAIRS:
+        word = "unresolved"
+    elif wins * 10 >= 9 * n and gap > pq[2] - pq[0]:
         word = "better"
     elif losses * 10 >= 9 * n and -gap > pq[2] - pq[0]:
         word = "worse"
@@ -70,10 +75,10 @@ def main(argv=None) -> int:
     ap.add_argument("--workload", required=True)
     ap.add_argument("--pairs", type=int, default=10)
     ap.add_argument("--seed", type=int, default=1)
-    ap.add_argument("--seconds", type=float, default=15)
     args = ap.parse_args(argv)
     with open(os.path.join(ROOT, "BENCHMARK.json")) as f:
-        e2e = json.load(f)["end_to_end"]
+        bench = json.load(f)
+    e2e, seconds = bench["end_to_end"], bench["run_seconds"]
 
     revs = {"parent": args.parent, "change": args.change}
     samples = {side: [] for side in revs}
@@ -86,7 +91,7 @@ def main(argv=None) -> int:
             for i in range(args.pairs):
                 order = ("parent", "change") if i % 2 == 0 else ("change", "parent")
                 for side in order:
-                    res = run_once(trees[side], args.workload, args.seed + i, args.seconds)
+                    res = run_once(trees[side], args.workload, args.seed + i, seconds)
                     samples[side].append(res)
                     vals = {m["name"]: res["metrics"][m["name"]]["value"] for m in e2e}
                     print(json.dumps({"pair": i, "side": side, "rev": revs[side],
